@@ -88,41 +88,9 @@ object Dedup {
 
   /** Storage level for the pair family's CORPUS-SCALE persists (the
     * hashed-set input relation and the ordered-prefix cache — Θ(Σ tokens)
-    * bytes each). Conf seam `spark.graft.pair.persistLevel`, default
-    * `MEMORY_AND_DISK`: at the measured fourth decade (SCALE.md §Round 15)
-    * the deserialized on-heap form of the prefix cache crosses the local
-    * cache-fit boundary and q24/q60 pay a disk-backed materialization —
-    * `MEMORY_AND_DISK_SER` trades heap for codec CPU and is the banked
-    * lever, adopted or rejected per the A/B banked there. */
-  private def pairPersistLevel(spark: org.apache.spark.sql.SparkSession): StorageLevel =
-    StorageLevel.fromString(
-      spark.conf.get("spark.graft.pair.persistLevel", "MEMORY_AND_DISK"))
-
-  /** Seam retention policy (round 16). An A/B seam lives exactly as long
-    * as its experiment: once the A/B is banked in SCALE.md and DECIDED,
-    * the losing branch is deleted and its conf retired — git history at
-    * the banking commit keeps the losing shape reproducible, and a kept
-    * seam is an untested code path that every later restructuring must
-    * drag along (round 15 ended with five of them in this file).
-    * Deployment overrides are NOT experiments and stay:
-    * `spark.graft.pair.persistLevel` ([[pairPersistLevel]]) and
-    * `spark.graft.pair.maxShuffleWidth` ([[pairWidthCap]]) encode
-    * regime boundaries a 100 TB deployment tunes per cluster, each with
-    * its negative A/B recorded at the definition site.
-    *
-    * Retired this round (verdict in, losing branch deleted):
-    * `carryPrefixInCache` (trimmed ord-only cache won, SCALE.md §R15),
-    * `keepInputCache` (release-after-materialize won, §R15),
-    * `legacyOrderJoin` (df≥2 shuffled-hash attach won, §R15),
-    * `legacyPairDistinct` (widened grouping-only distinct won, §R15),
-    * `candidateHashJoin` (round 15's AMBIGUOUS containment-join lever,
-    * re-run with the I/O sentinel: two sessions' minima disagree in
-    * DIRECTION, effect below session noise — REJECTED, §R16),
-    * `delete1HashJoin` (built and REJECTED this round — the delete-1
-    * candidate joins' hash build measured ~1.2× slower on calm
-    * both-sentinel legs, §R16; sort-merge stays). */
-
-
+    * bytes each). `MEMORY_AND_DISK_SER` was measured 3.2-5.8× slower at
+    * the fourth decade and rejected (SCALE.md §Round 15). */
+  private val PairPersistLevel = StorageLevel.MEMORY_AND_DISK
 
   /** id + distinct xxhash64'd token set. NOT persisted here: callers
     * persist at their own layering (block rename + set size) so the
@@ -161,30 +129,23 @@ object Dedup {
     * must come from the data, not the conf. */
   private val PairJoinTargetOccPerPartition = 768L * 1024
 
+  /** Upper bound on the self-sized pair widths — the measured regime
+    * through the third decade. A 4096 cap at the fourth decade was
+    * inseparable from session state (SCALE.md §Round 15, "the 79 GB
+    * candidate-sort spill"). */
+  private val PairWidthCap = 1024L
+
   /** Data-aware shuffle width for the pair family's occ-scale posting
     * joins: enough partitions to hold ~[[PairJoinTargetOccPerPartition]]
     * slim posting rows each, never below the session's configured width
     * (a cluster session sized for its executors already starts higher —
-    * this knob only ever WIDENS a bench-sized default), capped at 1024
-    * within the measured regime. `occ` is the total token-occurrence
+    * this knob only ever WIDENS a bench-sized default), capped at
+    * [[PairWidthCap]]. `occ` is the total token-occurrence
     * count the routing aggregate (or a one-row sum over the persisted
     * prefix relation) already has — no extra corpus pass. */
-  private[operators] def pairShuffleWidth(occ: Long, sessionWidth: Int,
-                                          cap: Long = 1024L): Int =
+  private[operators] def pairShuffleWidth(occ: Long, sessionWidth: Int): Int =
     math.max(sessionWidth,
-      math.min(cap, occ / PairJoinTargetOccPerPartition).toInt)
-
-  /** Upper bound on the self-sized pair widths
-    * (`spark.graft.pair.maxShuffleWidth`, default 1024 — the measured
-    * regime through the third decade). The fourth-decade corpora want
-    * more: q60's full-posting volume at the 1000× corpus computes to
-    * ~3600 partitions before the cap, so the cap — not the 0.75 M-row
-    * target — decides its per-task memory there. Runtime conf so the
-    * regime boundary is a deployment decision, A/B-measurable without a
-    * rebuild ([[pairShuffleWidth]] still never narrows below the
-    * session width). */
-  private def pairWidthCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.pair.maxShuffleWidth", "1024").toLong
+      math.min(PairWidthCap, occ / PairJoinTargetOccPerPartition).toInt)
 
   /** Repartition `df` on the posting-join keys at `width` — but ONLY when
     * that widens the plan past the session default: at bench scale the
@@ -274,7 +235,7 @@ object Dedup {
     val hs = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(PairPersistLevel)
     jaccardPairsFromHashed(hs, threshold, vocabHint)
   }
 
@@ -367,7 +328,7 @@ object Dedup {
     val hs = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(PairPersistLevel)
     val nMax = hs.agg(max(col("n"))).head() match {
       case r if r.isNullAt(0) => 0
       case r => r.getInt(0)
@@ -400,12 +361,11 @@ object Dedup {
     val base = hs.where(col("n") > 0)
       .select(col("blk"), col("hs_id"), col("n"), col("hs"))
       .withColumn("fp", aggregate(col("hs"), lit(0L), (a, x) => a + x))
-      .persist(pairPersistLevel(hs.sparkSession))
+      .persist(PairPersistLevel)
     // this path triggers precisely on big corpora (occ > SmallCorpusOccMax)
     // — size the Θ(Σn) delete-fingerprint join from the data
     val width = pairShuffleWidth(totalOcc(base),
-      hs.sparkSession.sessionState.conf.numShufflePartitions,
-      pairWidthCap(hs.sparkSession))
+      hs.sparkSession.sessionState.conf.numShufflePartitions)
     // `base` is materialized (MEMORY_AND_DISK: its blocks can spill but
     // never vanish), and every downstream stage reads it — the input
     // cache has no consumer left; at corpus scale holding it doubles the
@@ -541,7 +501,7 @@ object Dedup {
     * build entries (≈ 10 MB hashed) and the SHUFFLE_HASH build always
     * fits. That turns the round-14 sort-merge join — which sorted BOTH
     * corpus-scale sides, ~17 GB of q60's 79 GB fourth-decade spill
-    * (`tools.ProfileSpillMap`, SCALE.md §Round 15) — into a sort-free
+    * (SCALE.md §Round 15, per-node spill map) — into a sort-free
     * streaming probe (adopted round 15; the full-df seam retired with
     * its verdict — the A/B table and the order-identity argument above
     * remain the record).
@@ -612,8 +572,8 @@ object Dedup {
     val spark = hs.sparkSession
     val occ = totalOcc(hs)
     val width = pairShuffleWidth(occ,
-      spark.sessionState.conf.numShufflePartitions, pairWidthCap(spark))
-    val pre = orderedArrays(hs, width, carry).persist(pairPersistLevel(spark))
+      spark.sessionState.conf.numShufflePartitions)
+    val pre = orderedArrays(hs, width, carry).persist(PairPersistLevel)
     pre.count()
     hs.unpersist(blocking = false)
     (pre, pre.withColumn("prefix", prefixExpr(threshold)), occ)
@@ -639,8 +599,7 @@ object Dedup {
       // which the hashed-set input cache is released inside prefixCache)
       val (pre, prefixed, occ) = prefixCache(hs, threshold)
       val width = pairShuffleWidth(occ,
-        hs.sparkSession.sessionState.conf.numShufflePartitions,
-        pairWidthCap(hs.sparkSession))
+        hs.sparkSession.sessionState.conf.numShufflePartitions)
       val l = widenForJoin(prefixed.select(col("blk"), col("hs_id").as("left_id"),
         col("n").as("nl"), posexplode(col("prefix")).as(Seq("lp", "h"))),
         width, col("blk"), col("h"))
@@ -711,7 +670,7 @@ object Dedup {
     val hs = hashedSets(both, id, tokenSet, Seq(block, "side"))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession))
+      .persist(PairPersistLevel)
     crossJaccardFromHashed(hs, threshold)
   }
 
@@ -742,64 +701,8 @@ object Dedup {
     val hs = shingleHashedSetsBlocked(both, id, tokens, shingleN, Seq(block, "side"))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession))
+      .persist(PairPersistLevel)
     crossJaccardFromHashed(hs, threshold)
-  }
-
-  /** Experiment seam: the exact-first cascade applied to the R×S family —
-    * measured and deliberately NOT wired into [[crossJaccardPairs]]
-    * (SCALE.md §Round 13 cross cascade: a decisive 3× LOSS on the
-    * disjoint-token 100× corpus — 51.7 s vs 15.7 s direct — and parity
-    * within session noise on the verbatim-duplicates shape it was
-    * hypothesized FOR). The structural reason the self-join cascade
-    * wins ([[canonicalIdsCascadeAt]]) does not transfer: there it
-    * collapses a Θ(clique²) EDGE relation before the CC consumer; here
-    * the pair list IS the output, the PPJoin's candidates are already
-    * pair-bounded with or without collapse, and the array-keyed rep
-    * groupBy is pure added cost. Kept (with [[crossJaccardPairsDirectPath]]
-    * and `tools.ProfileCrossCascade`) as the substrate that established
-    * the negative result; DedupSpec asserts the branches emit identical
-    * pairs, which is what makes the A/B valid. */
-  private[graft] def crossJaccardPairsCascadePath(left: DataFrame,
-      right: DataFrame, id: String, tokenSet: String, block: String,
-      threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"cross-jaccard threshold must be in (0, 1], got $threshold")
-    val both = left.select(lit(0).as("side"), col(id), col(block), col(tokenSet))
-      .unionByName(right.select(lit(1).as("side"), col(id), col(block), col(tokenSet)))
-    val hs = hashedSets(both, id, tokenSet, Seq(block, "side"))
-      .withColumnRenamed(block, "blk")
-      .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession))
-    val withRep = hs.withColumn("skey", array_sort(col("hs")))
-      .join(hs.withColumn("skey", array_sort(col("hs")))
-        .groupBy(col("blk"), col("side"), col("skey"))
-        .agg(min(col("hs_id")).as("rep")), Seq("blk", "side", "skey"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val reps = withRep.where(col("hs_id") === col("rep"))
-      .select(col("blk"), col("side"), col("hs_id"), col("n"), col("hs"))
-    val members = (s: Int) => withRep.where(col("side") === s)
-      .select(col("rep"), col("hs_id"))
-    crossJaccardFromHashed(reps, threshold)
-      .withColumnRenamed("left_id", "lrep").withColumnRenamed("right_id", "rrep")
-      .join(members(0).select(col("rep").as("lrep"), col("hs_id").as("left_id")), "lrep")
-      .join(members(1).select(col("rep").as("rrep"), col("hs_id").as("right_id")), "rrep")
-      .select(col("left_id"), col("right_id"), col("jaccard"))
-  }
-
-  /** Profiling seam: force the DIRECT R×S path past every gate, so the
-    * cascade's effect is measurable A/B on the same corpus. */
-  private[graft] def crossJaccardPairsDirectPath(left: DataFrame,
-      right: DataFrame, id: String, tokenSet: String, block: String,
-      threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"cross-jaccard threshold must be in (0, 1], got $threshold")
-    val both = left.select(lit(0).as("side"), col(id), col(block), col(tokenSet))
-      .unionByName(right.select(lit(1).as("side"), col(id), col(block), col(tokenSet)))
-    crossJaccardFromHashed(hashedSets(both, id, tokenSet, Seq(block, "side"))
-      .withColumnRenamed(block, "blk")
-      .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession)), threshold)
   }
 
   /** Shared R×S candidate/verify core: the same SLIM-posting PPJoin split
@@ -811,8 +714,7 @@ object Dedup {
   private def crossJaccardFromHashed(hs: DataFrame, threshold: Double): DataFrame = {
     val (pre, prefixed, occ) = prefixCache(hs, threshold, carry = Seq("side"))
     val width = pairShuffleWidth(occ,
-      hs.sparkSession.sessionState.conf.numShufflePartitions,
-      pairWidthCap(hs.sparkSession))
+      hs.sparkSession.sessionState.conf.numShufflePartitions)
     val l = widenForJoin(prefixed.where(col("side") === 0).select(col("blk"),
       col("hs_id").as("left_id"), col("n").as("nl"),
       posexplode(col("prefix")).as(Seq("lp", "h"))),
@@ -869,7 +771,7 @@ object Dedup {
     val hs = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(PairPersistLevel)
     containmentFromHashed(hs, threshold)
   }
 
@@ -881,7 +783,7 @@ object Dedup {
     * injectively-hashed shingles; spec-asserted on the real corpus), so a
     * string-shingle SQL oracle still verifies the output.
     *
-    * WHEN to prefer which (measured, `tools.ProfileShingleBuild`): the
+    * WHEN to prefer which (measured, SCALE.md §Dedup family): the
     * window path pays one shuffle+sort on the doc id but O(1) work per
     * gram; the interpreted string builder pays no shuffle but n
     * `element_at` calls + a concat per gram. At n=3 over short docs the
@@ -904,7 +806,7 @@ object Dedup {
     val hs = shingleHashedSetsBlocked(df, id, tokens, shingleN, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(PairPersistLevel)
     containmentFromHashed(hs, threshold)
   }
 
@@ -919,8 +821,7 @@ object Dedup {
     // the r side explodes FULL ordered arrays, so Σn is exactly this
     // join's posting volume — size its shuffle from the data
     val width = pairShuffleWidth(occ,
-      hs.sparkSession.sessionState.conf.numShufflePartitions,
-      pairWidthCap(hs.sparkSession))
+      hs.sparkSession.sessionState.conf.numShufflePartitions)
     val l = widenForJoin(prefixed.select(col("blk"), col("hs_id").as("left_id"),
       col("n").as("nl"), posexplode(col("prefix")).as(Seq("lp", "h"))),
       width, col("blk"), col("h"))
@@ -1058,20 +959,13 @@ object Dedup {
   private[graft] def shingleHashedSetsBlocked(df: DataFrame, id: String,
                                               tokens: String, n: Int,
                                               carry: Seq[String]): DataFrame = {
-    // codegen'd posexplode + get(tk, pos+j) shingle build (see
-    // [[graft.operators.TextAnalysis.tfidfCosinePairsTokens]]): the
-    // window-lead shape paid an exchange + per-doc sort of the token
-    // stream to read values the retained array already holds; the set
-    // reduce below now plans its own hash aggregate, whose map-side
-    // partial collect_set dedups shingles BEFORE its exchange (A/B'd in
-    // OPTIMIZATION_r20.md). Past-the-end positions hash as 0L, exactly
-    // the old coalesce(lead(h0, j), 0L).
-    // window-lead build KEPT here (round-20 A/B, ProfileSeamAB, 2
-    // sessions over q24/q25/q60/q62): the posexplode+get rewrite that won
-    // on the ExactSubstr/tfidf/bigram sites read a wash-to-loss on the
-    // shingle consumers — the set reduce below rides the window's hash
-    // exchange for free (one exchange total), where the rewrite paid its
-    // own aggregate exchange and re-hashed every token n times.
+    // window-lead build KEPT here (OPTIMIZATION_r20.md, "Second
+    // measurement pass", 2 sessions over q24/q25/q60/q62): the
+    // posexplode+get rewrite that won on the ExactSubstr/tfidf/bigram
+    // sites read a wash-to-loss on the shingle consumers — the set
+    // reduce below rides the window's hash exchange for free (one
+    // exchange total), where the rewrite paid its own aggregate exchange
+    // and re-hashed every token n times.
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("hs_id") +: carry.map(col): _*).orderBy("pos")
     var th = df.select(col(id).as("hs_id") +: carry.map(col) :+
@@ -1483,7 +1377,7 @@ object Dedup {
     val hsRaw = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(PairPersistLevel)
     // ONE stats job serves both the occurrence gate here and (below the
     // gate) the pair stage's representation routing — the round-19 shape
     // paid a separate sum(n) job for the gate and then re-derived occ
@@ -1510,7 +1404,7 @@ object Dedup {
     // own derived cache has materialized
     val repHs = withRep.where(col("hs_id") === col("rep"))
       .select(col("blk"), col("hs_id"), col("n"), col("hs"))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(PairPersistLevel)
     val repPairs = jaccardPairsFromHashed(repHs, threshold, vocabHint = None)
       .select("left_id", "right_id")
     // the pair stage's eager routing aggregate materialized repHs — and

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Retrieval composition operators — the serving/evaluation half of the
   * similarity family: hybrid rank fusion (lexical BM25 + dense vectors is
   * how production RAG retrieval actually ships) and retrieval-quality
-  * reporting (the recall@k measurement the ANN profiling tools compute
-  * driver-side, exposed as a distributed, oracle-able operator).
+  * reporting (the recall@k measurement, as a distributed, oracle-able
+  * operator).
   *
   * Both operate on ANSWER-SIZED relations (top-k rankings, |queries|·k
   * rows) — metadata scale; the corpus-scale work lives in the tiers that

@@ -353,8 +353,8 @@ object TextAnalysis {
     * relation (≤ bigram-type rows). The scoring attaches them to the
     * corpus-scale stream as one (w1,w2) shuffle join plus two BROADCASTS
     * (ctx/back are ≤ |vocab| rows) — per-row hash probes, not exchanges.
-    * A score-per-TYPE-then-one-join rewrite was A/B-measured
-    * (ProfileKnAB: 6.87 vs 8.86 s at sf10) and REJECTED — the broadcasts
+    * A score-per-TYPE-then-one-join rewrite was A/B-measured (6.87 vs
+    * 8.86 s at sf10, SCALE.md §Round 19b) and REJECTED — the broadcasts
     * were never the cost; an initial ladder read of 62.7 s at sf10 was a
     * first-touch artifact of the corpus-build session, not a plan defect
     * (the same shape re-measures 6.9 s clean). round(…,6) on the averaged
@@ -466,10 +466,10 @@ object TextAnalysis {
       minCosine)
 
   /** [[tfidfCosinePairs]] with the term stream built as HASHED n-gram
-    * shingles on the codegen'd posexplode + window-lead path — the q76
-    * production gram builder. The higher-order `transform`+`element_at`
-    * array build is CodegenFallback and re-interprets n element_at calls
-    * per gram, and the gram STRING then rides every exchange; here the
+    * shingles on the codegen'd posexplode + get(tk, pos+j) path. The
+    * higher-order `transform`+`element_at` array build is
+    * CodegenFallback and re-interprets n element_at calls per gram, and
+    * the gram STRING then rides every exchange; here the
     * gram reduces to its [[md5Long]] inside the build expression, so the
     * shuffles, joins, and group keys downstream carry 8-byte longs.
     * Measured at sf0.1 (BenchOne, warm, same session): 11.0 → 2.7 s vs
@@ -519,8 +519,10 @@ object TextAnalysis {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // `nDocsHint` lets a caller that KNOWS every input doc contributes a
     // term (the tokens builder — even an empty doc yields its short-side
-    // whole-array term) count docs on the column-pruned DOC-grain scan
-    // instead of a distinct over the corpus-scale tf relation (guide §1;
+    // whole-array term, and so does a NULL array, since size(NULL) is -1
+    // with ANSI off; LmQualitySpec pins it) count docs on the
+    // column-pruned DOC-grain scan instead of a distinct over the
+    // corpus-scale tf relation (guide §1;
     // A/B'd in OPTIMIZATION_r20.md). The value is identical by
     // construction; the generic terms-stream entry keeps the exact
     // distinct (docs with empty term arrays must not count there).
@@ -641,11 +643,11 @@ object TextAnalysis {
     * → 0 = assembled from passages that exist elsewhere.
     *
     * Scale shape: grams are built on the codegen'd posexplode + window-lead
-    * path (the [[winnowedFingerprints]] shape — the higher-order
-    * `transform`+`element_at` [[shingles]] builder is CodegenFallback and
-    * measured ~3× slower per gram; rebuilt here round 9, 9.3 → ~2 s at
-    * sf0.1) and reduce to [[md5Long]] longs inside the hash call, so the
-    * gram string never outlives its expression. The window costs one
+    * path (the higher-order `transform`+`element_at` [[shingles]]
+    * builder is CodegenFallback and measured ~3× slower per gram; rebuilt
+    * here round 9, 9.3 → ~2 s at sf0.1) and reduce to [[md5Long]] longs
+    * inside the hash call, so the gram string never outlives its
+    * expression. The window costs one
     * exchange on the doc id; the per-doc distinct that follows reuses that
     * partitioning (HashPartitioning(id) satisfies the (id, gram) clustered
     * distribution — no second exchange, plan-asserted in
@@ -659,7 +661,7 @@ object TextAnalysis {
     * table; this shape shuffles grams once by g and once,
     * map-side-combined to doc-scale, by doc, and is join-free
     * (plan-asserted). Measured same-session vs the join shape
-    * (ProfileScaleCurve, min over runs): 1.48→1.20 s at sf0.01,
+    * (SCALE.md §Round-8 additions, min over runs): 1.48→1.20 s at sf0.01,
     * 1.70→1.42 s at sf0.1, 8.50→6.76 s at the synthetic 10× corpus — ~20%
     * at every decade, growing at scale with the retired hash table; at
     * sf0.1 in isolation the two are within session noise, so the shape
@@ -685,31 +687,24 @@ object TextAnalysis {
     * A/B'd the widening and called it a WASH — but its "zero agg spill
     * either way" evidence came from the vacuous probe that read a
     * never-executed plan (ADVICE r14). The round-15 re-run with the
-    * fixed probe (ProfileCalibrated novelty_ab, interleaved,
-    * calm-bracketed, SCALE.md §Round 15) reversed it: at the fourth
-    * synthetic decade the static session width spills 105-107 GB in the
-    * per-gram hash maps vs 44.5 GB widened, and the widened shape runs
-    * 1.17-1.65× faster — so the width is now WIRED as the default, not
-    * left as opt-in surface. */
+    * fixed probe (interleaved, calm-bracketed, SCALE.md §Round 15)
+    * reversed it: at the fourth synthetic decade the static session
+    * width spills 105-107 GB in the per-gram hash maps vs 44.5 GB
+    * widened, and the widened shape runs 1.17-1.65× faster — so the width
+    * is now WIRED as the default, not left as opt-in surface. */
   def ngramNovelty(df: org.apache.spark.sql.DataFrame, id: String,
                    textCol: String, n: Int = 8,
                    shuffleWidth: Option[Int] = None): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"gram order must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
     val tok = df.select(col(id).as("nv_id"), tokens(col(textCol)).as("tk"))
-    // codegen'd posexplode + get(tk, pos+j) build (see
-    // [[tfidfCosinePairsTokens]]): the window-lead shape paid an exchange +
-    // per-doc sort of the token stream; the per-doc dedup below now plans
-    // its own hash aggregate instead of riding the window's partitioning —
-    // its map-side partial dedup shrinks the gram stream BEFORE that
-    // exchange, which the window shape could not (A/B'd in
-    // OPTIMIZATION_r20.md).
-    // window-lead build KEPT here (round-20 A/B, ProfileSeamAB, 2
-    // sessions): the posexplode+get rewrite that won everywhere else
-    // LOSES on this operator (q76 read old-minus-new −0.19/−0.29 s) —
-    // the per-doc dedup below rides the window's hash exchange for free,
-    // where the rewrite made it pay its own aggregate exchange over a
-    // gram stream its map-side partial barely shrinks.
+    // window-lead build KEPT here (OPTIMIZATION_r20.md, "Second
+    // measurement pass", 2 sessions): the posexplode+get rewrite that
+    // won everywhere else LOSES on this operator (q76 read
+    // old-minus-new −0.19/−0.29 s) — the per-doc dedup below rides the
+    // window's hash exchange for free, where the rewrite made it pay its
+    // own aggregate exchange over a gram stream its map-side partial
+    // barely shrinks.
     val w = Window.partitionBy("nv_id").orderBy("pos")
     var th = tok.where(size(col("tk")) >= n)
       .select(col("nv_id"), posexplode(col("tk")).as(Seq("pos", "tok")))
@@ -766,20 +761,20 @@ object TextAnalysis {
     * twice in ONE doc is a duplicated substring too (self-repetition),
     * exactly as the suffix array sees it.
     *
-    * Scale shape: grams ride the same posexplode + window-lead build as
-    * [[ngramNovelty]] (one exchange on the doc id), then ONE exchange on
-    * the gram hash — self-sized by [[gramReduceWidth]], persisted at that
-    * width because it feeds both the occurrence reduce and the dup-site
-    * semi-join; the reduce output stays partitioned on `g`, so the
-    * semi-join back (the step q76 avoids but removal fundamentally needs:
-    * WHICH sites are duplicated, not how many) adds NO exchange
+    * Scale shape: grams ride the exchange-free posexplode + get build of
+    * [[esGramSites]], then ONE exchange on the gram hash — self-sized by
+    * [[gramReduceWidth]], persisted at that width because it feeds both
+    * the occurrence reduce and the dup-site semi-join; the reduce output
+    * stays partitioned on `g`, so the semi-join back (the step q76
+    * avoids but removal fundamentally needs: WHICH sites are duplicated,
+    * not how many) adds NO exchange
     * (plan-asserted in TextAnalysisSpec). Dup sites then reduce to
     * doc-grain start-position arrays (bounded by doc length), and the
     * rebuild is a row-local higher-order filter over (tokens, starts) —
     * token q survives iff no duplicated window starts in (q−n, q] — with
     * span count read off the sorted starts (a new span wherever the gap
     * to the previous start exceeds n). No driver action, no
-    * corpus-scale sort; the only window is the lead build's per-doc one.
+    * corpus-scale sort, no window.
     *
     * Reference scope note: the cashback reference has no corpus dedup at
     * all (its text surface is `api.py:122-132` description cleanup); this
@@ -1020,9 +1015,9 @@ object TextAnalysis {
   }
 
   /** Shared gram-site build for the ExactSubstr family: (es_id, pos, g)
-    * for every n-token window, on the codegen'd posexplode + window-lead
-    * path (see [[ngramNovelty]]'s scaladoc for why this beats the
-    * higher-order builder). Docs shorter than n yield no row. `hash`
+    * for every n-token window, on the codegen'd posexplode + get(tk, pos+j)
+    * path (see [[ngramNovelty]]'s scaladoc for why codegen'd builds beat
+    * the higher-order builder). Docs shorter than n yield no row. `hash`
     * picks the gram key: the 60-bit md5Long (8 bytes/site, PPM-level
     * birthday collisions at 10¹³ grams — see [[exactSubstrRemove]]) or
     * the raw n-token string (collision-free, ~n tokens/site). */
@@ -1151,8 +1146,8 @@ object TextAnalysis {
     * bound), this one is MEASURED: at the fourth synthetic decade the
     * static session width packs ~8 M gram rows per task hash map and
     * spills 105-107 GB; ~1 M rows/partition spills 44.5 GB and runs
-    * 1.17-1.65× faster (ProfileCalibrated novelty_ab with the fixed
-    * spill probe, SCALE.md §Round 15). */
+    * 1.17-1.65× faster (measured with the fixed spill probe, SCALE.md
+    * §Round 15). */
   private[operators] val GramReduceTargetBytesPerPartition: Long = 3L << 20
 
   /** Data-aware width for gram-reduce exchanges: never narrower than the
@@ -1190,7 +1185,7 @@ object TextAnalysis {
   }
 
   /** Winnowing document fingerprints (Schleimer et al., SIGMOD'03 variant):
-    * k-gram hashes via posexplode + window-lead (codegen'd, the k-gram
+    * k-gram hashes via posexplode + get(tk, pos+j) (codegen'd, the k-gram
     * string exists only inside the hash call), then keep each hash that is
     * the minimum of the w-window ending at its position — a deterministic
     * cover of every w-window's minimum, so any match of ≥ w+k-1 consecutive

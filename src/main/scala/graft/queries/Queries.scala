@@ -821,7 +821,7 @@ object Queries {
     // BEFORE the shingle lambda reads it — an inline split() as the HOF's
     // array arg is re-evaluated inside every element_at (no CSE inside
     // lambdas; see the q52/q49 fix), re-splitting text 3× per shingle.
-    // MEASURED (ProfileShingleBuild, round 9): at n=3 over these short
+    // MEASURED (SCALE.md §Dedup family, round 9): at n=3 over these short
     // docs the interpreted string-shingle build (~0.4 s warm at sf0.1)
     // BEATS the window-lead hashed build (~0.8 s — its shuffle+sort costs
     // more than the 3-element_at interpretation), so unlike q76 (n=8,
@@ -1631,8 +1631,8 @@ object Queries {
   val q120_tfidf_cosine_pairs: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tok"))
-    // hashed window-lead gram build (the production path — grams reduce to
-    // md5 longs inside the build; the array-based tfidfCosinePairs is the
+    // hashed posexplode + get gram build (the production path — grams
+    // reduce to md5 longs inside the build; the array-based tfidfCosinePairs is the
     // generic-terms twin, spec-asserted identical output)
     TextAnalysis.tfidfCosinePairsTokens(docs, "doc_id", "tok", 5, "lang", 0.5)
   }

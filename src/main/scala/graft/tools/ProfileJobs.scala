@@ -39,7 +39,7 @@ object ProfileJobs {
     spark.sparkContext.addSparkListener(listener)
     (1 to reps).foreach { rep =>
       rows.synchronized(rows.clear())
-      val c0 = ProfileUtil.calib(spark)
+      val c0 = graft.Bench.calibrationOnce(spark)
       val t0 = System.nanoTime()
       graft.Bench.materialize(fn(spark, dir))
       val total = (System.nanoTime() - t0) / 1e9

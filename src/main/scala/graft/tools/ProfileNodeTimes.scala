@@ -44,7 +44,7 @@ object ProfileNodeTimes {
     graft.Bench.materialize(fn(spark, dir))
     val total = (System.nanoTime() - t0) / 1e9
     Thread.sleep(1500)
-    println(f"== $name total=$total%.3f calib=${ProfileUtil.calib(spark)}%.3f")
+    println(f"== $name total=$total%.3f calib=${graft.Bench.calibrationOnce(spark)}%.3f")
     def walk(p: SparkPlan, depth: Int,
              seen: java.util.Set[AnyRef]): Unit = {
       val ms = p.metrics.toSeq

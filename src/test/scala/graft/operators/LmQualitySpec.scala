@@ -107,7 +107,7 @@ class LmQualitySpec extends SparkSpec {
     assert(got.toSeq === again.toSeq)
   }
 
-  test("tfidfCosinePairsTokens (hashed window-lead build) ≡ the array path, short docs included") {
+  test("tfidfCosinePairsTokens (hashed posexplode + get build) ≡ the array path, short docs included") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"), col("text"))
@@ -125,6 +125,31 @@ class LmQualitySpec extends SparkSpec {
     assert(viaTokens === viaArrays)
     assert(viaTokens.exists(p => p._1 == 90001L && p._2 == 90002L),
       "the short-doc (< n tokens) path must flow through both builds")
+  }
+
+  test("tfidfCosinePairsTokens ≡ the array path with NULL and empty token arrays") {
+    // the tokens path counts docs off the doc-grain scan (nDocsHint), the
+    // array path off the tf relation: they agree only if the NULL and the
+    // empty doc each emit a term. Docs 1-3 share one 5-gram and nothing
+    // else, so their pair cosines depend on nothing but nDocs.
+    val docs = Seq[(Long, String, String)](
+      (1L, "en", "q r s t u a"),
+      (2L, "en", "q r s t u b"),
+      (3L, "en", "q r s t u c"),
+      (4L, "en", null),
+      (5L, "en", ""))
+      .toDF("doc_id", "lang", "text")
+      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tok"))
+    val viaArrays = TextAnalysis.tfidfCosinePairs(
+      docs.select(col("doc_id"), col("lang"),
+        TextAnalysis.ngrams(col("tok"), 5).as("grams")),
+      "doc_id", "grams", "lang", 0.01)
+      .as[(Long, Long, Double)].collect().toSet
+    val viaTokens = TextAnalysis.tfidfCosinePairsTokens(
+      docs, "doc_id", "tok", 5, "lang", 0.01)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(viaArrays.map(p => (p._1, p._2)) === Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)))
+    assert(viaTokens === viaArrays)
   }
 
   test("tfidfCosinePairs sees REPEATED passages that set-Jaccard flattens") {

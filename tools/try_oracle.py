@@ -2,45 +2,12 @@
 """Dev tool: try a candidate oracle SQL against an existing Verify dump
 without re-running Spark. Usage:
   python3 tools/try_oracle.py <sfDir> <verifyOutDir> <queryName> <sqlFile>
-Prints the same verdict check_oracle.py would."""
-import sys, glob, os
-import duckdb
-import pandas as pd
+Prints the same verdict check_oracle.py would, plus a sample of the
+one-sided rows when the row counts differ."""
+import sys
+from check_oracle import check, connect, read_dump
 
 sf, out, name, sqlfile = sys.argv[1:5]
-con = duckdb.connect()
-for p in glob.glob(f"{sf}/*.parquet"):
-    t = os.path.basename(p).removesuffix(".parquet")
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-def canon(df):
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        df[c] = df[c].map(lambda v: None if v is None or (isinstance(v, float) and pd.isna(v)) else repr(v))
-    return df.sort_values(by=list(df.columns), na_position="first").reset_index(drop=True)
-
-spark_df = pd.concat([pd.read_parquet(f) for f in glob.glob(f"{out}/{name}/*.parquet")],
-                     ignore_index=True)
-sql = open(sqlfile).read()
-try:
-    duck_df = con.execute(sql).fetchdf()
-except Exception as e:
-    print(f"[FAIL-sql ] {name}: {e}")
-    sys.exit(1)
-a, b = canon(spark_df), canon(duck_df)
-if list(a.columns) != list(b.columns):
-    print(f"[FAIL-cols] {name}: spark={list(a.columns)} duck={list(b.columns)}")
-elif len(a) != len(b):
-    print(f"[FAIL-rows] {name}: spark={len(a)} duck={len(b)}")
-    sa = set(map(tuple, a.values.tolist())); sb = set(map(tuple, b.values.tolist()))
-    print("  only-spark:", list(sa - sb)[:3])
-    print("  only-duck :", list(sb - sa)[:3])
-elif not a.equals(b):
-    neq = (a != b) & ~(a.isna() & b.isna())
-    bad = neq.any(axis=1)
-    print(f"[FAIL-vals] {name}: {bad.sum()}/{len(a)} rows differ; first:")
-    idx = bad.idxmax()
-    print("  spark:", a.loc[idx].to_dict())
-    print("  duck :", b.loc[idx].to_dict())
-else:
-    print(f"[OK       ] {name}: {len(a)} rows")
+ok = check(connect(sf), name, read_dump(f"{out}/{name}"), open(sqlfile).read(),
+           row_diff=True)
+sys.exit(0 if ok else 1)
