@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types._
 
 /** Warehouse-load stage: idempotent anti-join append + DDL generation
@@ -9,27 +10,27 @@ import org.apache.spark.sql.types._
 object IncrementalLoad {
 
   /** J2/P8: `INSERT … WHERE NOT EXISTS` as a left-anti join on the key
-    * (reference load_to_redshift_lambda.py:88-96). Loading twice is a no-op
-    * (property-tested). At 100 TB both sides shuffle on the key — one
-    * exchange each, no driver-side key set. Returns rows actually appended
-    * (A3: the reference reports cursor.rowcount, :99-100). */
+    * (reference load_to_redshift_lambda.py:88-96), appended in one pass.
+    * Returns rows appended (A3: the reference reports cursor.rowcount,
+    * :99-100), observed on the write itself: the anti-join runs once,
+    * nothing is cached, and count and write see the same rows. The write
+    * is always issued, so a first load creates the table even from an
+    * empty batch (the reference's CREATE TABLE IF NOT EXISTS); an empty
+    * append adds no file to a partitioned table, one empty file to an
+    * unpartitioned one. Loading twice appends nothing. Keys compare with
+    * `=`, as NOT EXISTS does: duplicate keys within one batch all append,
+    * and NULL keys never match, so NULL-key rows append on every load.
+    * At 100 TB both sides shuffle on the key — no driver-side key set. */
   def appendNew(spark: SparkSession, incoming: DataFrame, table: String,
                 key: String, partitionCol: Option[String] = None): Long = {
     val fresh =
       if (!spark.catalog.tableExists(table)) incoming
       else incoming.join(spark.table(table).select(key), Seq(key), "left_anti")
-    // one computation of the anti-join for BOTH the count and the write:
-    // without the scoped persist the plan executes twice (a full extra pass
-    // over incoming at warehouse scale) with a consistency window between
-    fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.count()
-      if (n > 0) {
-        val writer = fresh.write.mode("append").format("parquet")
-        partitionCol.fold(writer)(c => writer.partitionBy(c)).saveAsTable(table)
-      }
-      n
-    } finally fresh.unpersist()
+    val appended = Observation()
+    val writer = fresh.observe(appended, count(lit(1)).as("n"))
+      .write.mode("append").format("parquet")
+    partitionCol.fold(writer)(c => writer.partitionBy(c)).saveAsTable(table)
+    appended.get("n").asInstanceOf[Long]
   }
 
   /** S11: schema → warehouse DDL with the reference's type-mapping table

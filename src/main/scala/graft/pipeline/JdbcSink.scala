@@ -47,7 +47,9 @@ object JdbcSink {
     * existing key set, append the rest, return the appended count (the
     * lambda reports cursor.rowcount, :99-100). `existingKeys` defaults to
     * reading the key column back over JDBC; specs inject a DataFrame to
-    * exercise the logic without a live warehouse. */
+    * exercise the logic without a live warehouse. Unlike
+    * [[IncrementalLoad.appendNew]], it counts before it writes: a load
+    * with nothing new then never opens a connection to the target. */
   def appendNew(spark: SparkSession, incoming: DataFrame, target: Target,
                 key: String,
                 existingKeys: Option[DataFrame] = None): Long = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §2.11 orchestration: the Step-Functions DAG (extract → transform → load,
@@ -33,16 +33,15 @@ object Pipeline {
     val (transactions, rewards) =
       ApiIngest.fetchData(spark, apiClient, transactionsCsv, rewardsCsv, retry)
 
-    // Transform (J1 + E1–E6 + P1/P2 + E4). Persisted for the run's scope:
-    // the anti-join append and the row-count report both consume it, and
-    // re-deriving it means a second full extract+transform pass.
+    // Transform (J1 + E1–E6 + P1/P2 + E4), then load: idempotent anti-join
+    // append on reward_id (J2). Both run as the load's one write; the
+    // transform's row count is an observed metric on that write, so
+    // nothing is cached and nothing runs twice.
+    val rows = Observation()
     val cashback = CashbackTransform.transform(rewards, transactions)
-    cashback.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Load: idempotent anti-join append on reward_id (J2).
-      val appended = IncrementalLoad.appendNew(
-        spark, cashback, warehouseTable, "reward_id", Some("transaction_date"))
-      Result(cashback.count(), appended)
-    } finally cashback.unpersist()
+      .observe(rows, count(lit(1)).as("n"))
+    val appended = IncrementalLoad.appendNew(
+      spark, cashback, warehouseTable, "reward_id", Some("transaction_date"))
+    Result(rows.get("n").asInstanceOf[Long], appended)
   }
 }
